@@ -50,10 +50,7 @@ def stage_counts(
     web stays hash-checked end-to-end."""
     from go_fluentd_spark.operators.acceptor import acceptor_chain
     from go_fluentd_spark.operators.dispatcher import route
-    from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
     from go_fluentd_spark.operators.parser import parse
-    from go_fluentd_spark.operators.postfilter import post_default
-    from go_fluentd_spark.plans.pipeline import POST_STRING_COLS
 
     conc = P.concatted(spark, sf_dir, cfg).persist()
     try:
@@ -67,15 +64,7 @@ def stage_counts(
         par = parse(accepted, cfg).persist()
         try:
             parsed_n = par.count()
-            enr = msgid(
-                es_index(
-                    spark,
-                    post_default(add_fields(spark, par, cfg), cfg, msg_cols=POST_STRING_COLS),
-                    cfg,
-                ),
-                cfg,
-            )
-            routed_n = route(spark, enr, cfg).count()
+            routed_n = route(spark, P.enrich_tail(spark, par, cfg), cfg).count()
         finally:
             par.unpersist()
         discarded_n = discard_reasons(conc, cfg).count()

@@ -40,27 +40,53 @@ POST_STRING_COLS = [
 ]
 
 
-def ingested(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return with_ingest_columns(sequences_df(spark, sf_dir))
+#: the chain's stages in pipeline order; ``chain(..., upto=name)`` cuts after one
+STAGES = ("ingested", "concatted", "accepted", "parsed", "enriched")
 
 
-def concatted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return concat_sessions(ingested(spark, sf_dir, cfg), max_len=cfg.concat_max_len)
-
-
-def accepted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return acceptor_chain(concatted(spark, sf_dir, cfg), cfg)
-
-
-def parsed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return parse(accepted(spark, sf_dir, cfg), cfg)
-
-
-def enriched(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    df = add_fields(spark, parsed(spark, sf_dir, cfg), cfg)
+def enrich_tail(spark: SparkSession, df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """The stages after parse: add_fields -> post default surgery -> es_index -> msgid."""
+    df = add_fields(spark, df, cfg)
     df = post_default(df, cfg, msg_cols=POST_STRING_COLS)
     df = es_index(spark, df, cfg)
     return msgid(df, cfg)
+
+
+def chain(
+    spark: SparkSession, seq: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG, upto: str = "enriched"
+) -> DataFrame:
+    """The whole dataflow over a sequences frame (``sequences_df`` at any
+    ``rep``), cut after stage ``upto`` (one of :data:`STAGES`)."""
+    steps = (
+        with_ingest_columns,
+        lambda df: concat_sessions(df, max_len=cfg.concat_max_len),
+        lambda df: acceptor_chain(df, cfg),
+        lambda df: parse(df, cfg),
+        lambda df: enrich_tail(spark, df, cfg),
+    )
+    for step in steps[: STAGES.index(upto) + 1]:
+        seq = step(seq)
+    return seq
+
+
+def ingested(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    return chain(spark, sequences_df(spark, sf_dir), cfg, "ingested")
+
+
+def concatted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    return chain(spark, sequences_df(spark, sf_dir), cfg, "concatted")
+
+
+def accepted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    return chain(spark, sequences_df(spark, sf_dir), cfg, "accepted")
+
+
+def parsed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    return chain(spark, sequences_df(spark, sf_dir), cfg, "parsed")
+
+
+def enriched(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    return chain(spark, sequences_df(spark, sf_dir), cfg)
 
 
 def routed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:

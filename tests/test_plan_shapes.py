@@ -3,8 +3,11 @@ design claims rest on (PLANS.md / README "Design for 100 TB") so a future
 change that silently introduces a sort-merge join, an extra shuffle, or an
 unpruned scan fails CI, not a cluster run."""
 
+import json
+import os
 import re
 
+from bench import QUERIES
 from go_fluentd_spark.operators import dataprep as DP
 from go_fluentd_spark.plans import pipeline as P
 
@@ -45,6 +48,28 @@ def test_sink_counts_reuses_window_partitioning(spark):
     # (sink, tag) grouping — the group-by after the window must not add more
     assert _n(plan, "Exchange") <= 3, plan[:2000]
     assert _n(plan, "SortMergeJoin") == 0
+
+
+def test_bench_measures_the_shipped_pipeline(spark):
+    """bench.py's table IS the reported query set (names and order of the
+    artifact's ``queries``), and its end-to-end entry at rep=1 plans to the
+    shipped ``enriched`` frame: same optimized plan up to expression ids and
+    the per-build counters on lambda variables and common subexpressions."""
+    with open(os.path.join(os.path.dirname(__file__), "..", "BENCH_r06.json")) as f:
+        assert [name for name, _, _ in QUERIES] == list(json.load(f)["parsed"]["queries"])
+
+    def optimized(df) -> str:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"(lambda \w+?|_common_expr)_\d+", r"\1", re.sub(r"#\d+", "#", plan))
+
+    build = {name: b for name, b, _ in QUERIES}["pipeline_routed_materialize"]
+    key = "spark.sql.debug.maxToStringFields"  # compare every column, untruncated
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        assert optimized(build(spark, SF, 1)) == optimized(P.enriched(spark, SF))
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_sequence_chunks_is_narrow(spark):

@@ -6,85 +6,29 @@ local[N] where one heap serves all cores).
 
 Legs: local-cluster[1,C,M] vs local-cluster[4,C,M] (default C=6 so the 4N
 leg's 24 executor cores + driver fit the 32-core box). Whole process tree
-CPU-pinned per leg to executors*C + driver headroom.
+CPU-pinned per leg to executors*C + driver headroom.  The job, warm-up and
+best-of-3 timing are ``tools/scaling_bench.run_leg``'s.
 
 Usage: python tools/executor_scaling.py [sf_dir] [rep] [cores_per_exec]
-Writes the "## Scaling 1 vs 4 executors" section of BENCH.md.
+Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-RUNNER = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-n_exec = int(sys.argv[1]); cpe = int(sys.argv[2]); sf_dir = sys.argv[3]; rep = int(sys.argv[4])
-from pyspark.sql import SparkSession, functions as F, types as T
-os.makedirs("/dev/shm/spark-tmp", exist_ok=True)
-spark = (SparkSession.builder.master(f"local-cluster[{n_exec},{cpe},4096]")
-    .appName("exec_scaling")
-    .config("spark.executor.memory", "4g")
-    .config("spark.sql.shuffle.partitions", str(n_exec * cpe * 2))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.local.dir", "/dev/shm/spark-tmp")
-    .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-
-from go_fluentd_spark.config import DEFAULT_CONFIG
-from go_fluentd_spark.plans import pipeline as P
-from go_fluentd_spark.operators.dispatcher import route
-from go_fluentd_spark.sources.synth import sequences_df, with_ingest_columns
-from go_fluentd_spark.operators.concat import concat_sessions
-from go_fluentd_spark.operators.acceptor import acceptor_chain
-from go_fluentd_spark.operators.parser import parse
-from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
-from go_fluentd_spark.operators.postfilter import post_default
-
-def job():
-    df = with_ingest_columns(sequences_df(spark, sf_dir, rep=rep))
-    df = concat_sessions(df, max_len=DEFAULT_CONFIG.concat_max_len)
-    df = acceptor_chain(df, DEFAULT_CONFIG)
-    df = parse(df, DEFAULT_CONFIG)
-    df = add_fields(spark, df, DEFAULT_CONFIG)
-    df = post_default(df, DEFAULT_CONFIG, msg_cols=P.POST_STRING_COLS)
-    df = es_index(spark, df, DEFAULT_CONFIG)
-    df = msgid(df, DEFAULT_CONFIG)
-    df = route(spark, df, DEFAULT_CONFIG)
-    cols = [F.map_keys(f.name) if isinstance(f.dataType, T.MapType) else F.col(f.name)
-            for f in df.schema.fields]
-    return df.select((F.xxhash64(*cols) %% 1000000007).alias("h")).agg(F.sum("h")).collect()[0][0]
-
-n_rows = with_ingest_columns(sequences_df(spark, sf_dir, rep=rep)).count()
-job()  # warm-up
-best = None
-for _ in range(3):
-    t0 = time.perf_counter(); job(); dt = time.perf_counter() - t0
-    best = dt if best is None or dt < best else best
-print(json.dumps({"executors": n_exec, "cores_per_exec": cpe, "rows": n_rows,
-                  "sec": round(best, 3), "rows_per_sec": round(n_rows / best, 1)}))
-spark.stop()
-"""
+from tools.scaling_bench import run_leg  # noqa: E402
 
 
 def run_level(n_exec: int, cpe: int, sf_dir: str, rep: int) -> dict:
-    pin_cores = n_exec * cpe + 2  # executors + driver headroom
-    cmd = [sys.executable, "-c", RUNNER % {"repo": REPO}, str(n_exec), str(cpe), sf_dir, str(rep)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{min(pin_cores, 32) - 1}"] + cmd
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=2400)
-    for line in out.stdout.strip().splitlines()[::-1]:
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"runner failed (executors={n_exec}):\n{out.stderr[-2000:]}")
+    conf = {"spark.master": f"local-cluster[{n_exec},{cpe},4096]", "spark.executor.memory": "4g"}
+    pin_cores = min(n_exec * cpe + 2, 32)  # executors + driver headroom
+    leg = run_leg(conf, n_exec * cpe, pin_cores, sf_dir, rep)
+    return {"executors": n_exec, "cores_per_exec": cpe, **leg}
 
 
 def main() -> None:
@@ -96,30 +40,6 @@ def main() -> None:
     high = run_level(4, cpe, sf_dir, rep)
     eff = (high["rows_per_sec"] / low["rows_per_sec"]) / 4
     print(json.dumps({"low": low, "high": high, "scaling_efficiency": round(eff, 3)}))
-
-    section = f"""## Scaling 1 vs 4 executors (local-cluster mode — real executor processes)
-
-The north rule's literal test: the identical job at N and 4N EXECUTORS.
-``local-cluster[{{n}},{cpe},4096]`` launches n separate executor JVM
-processes ({cpe} cores, 4 GB each) — per-executor heap/GC/python-workers are
-identical across legs, exactly like adding executors to a cluster.  CPU-
-pinned ({cpe}·n + driver), tmpfs shuffle, warm-up + best-of-3, fresh
-processes per leg.  Input: {low['rows']:,} sequences (rep={rep}).
-
-| executors | total exec cores | wall sec | sequences/sec |
-|---|---|---|---|
-| 1 | {cpe} | {low['sec']} | {low['rows_per_sec']:,} |
-| 4 | {4 * cpe} | {high['sec']} | {high['rows_per_sec']:,} |
-
-**Scaling efficiency (1→4 executors): {eff:.3f}** (target ≥ 0.8).
-"""
-    path = os.path.join(REPO, "BENCH.md")
-    marker = "## Scaling 1 vs 4 executors"
-    existing = open(path).read()
-    if marker in existing:
-        existing = existing.split(marker)[0]
-    with open(path, "w") as f:
-        f.write(existing.rstrip() + "\n\n" + section)
 
 
 if __name__ == "__main__":

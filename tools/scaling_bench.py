@@ -3,8 +3,8 @@ end-to-end job on the IDENTICAL input at two parallelism levels (local[N] and
 local[4N] — the sandbox stand-in for N vs 4N executors) and report throughput
 at both plus efficiency = (thr_4N / thr_N) / 4.
 
-Prints one JSON line; set SPARK_GRAFT_WRITE_BENCHMD=1 to also rewrite the
-"## Scaling" section of BENCH.md (off by default — that section is curated).
+Prints one JSON line.  ``run_leg`` is the one leg runner; it is shared with
+``tools/executor_scaling.py`` (local-cluster sessions) and bench.py's hunt.
 
 Usage: python tools/scaling_bench.py [sf_dir] [rep] [n_low] [n_high]
 """
@@ -18,75 +18,66 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-RUNNER = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from go_fluentd_spark.config import DEFAULT_CONFIG
-from go_fluentd_spark.operators.dispatcher import route
-from go_fluentd_spark.plans import pipeline as P
-from go_fluentd_spark.session import build_spark
-from pyspark.sql import functions as F
-
-cores = int(sys.argv[1]); sf_dir = sys.argv[2]; rep = int(sys.argv[3])
-n_runs = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-os.environ["SPARK_GRAFT_SEQ_REP"] = str(rep)
-spark = build_spark("scaling", cores=cores, shuffle_partitions=cores * 2,
-                    extra_conf={"spark.local.dir": "/dev/shm/spark-tmp"})
-
-from go_fluentd_spark.sources.synth import sequences_df, with_ingest_columns
-from go_fluentd_spark.operators.concat import concat_sessions
-from go_fluentd_spark.operators.acceptor import acceptor_chain
-from go_fluentd_spark.operators.parser import parse
-from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
-from go_fluentd_spark.operators.postfilter import post_default
-
-def job():
-    df = with_ingest_columns(sequences_df(spark, sf_dir, rep=rep))
-    df = concat_sessions(df, max_len=DEFAULT_CONFIG.concat_max_len)
-    df = acceptor_chain(df, DEFAULT_CONFIG)
-    df = parse(df, DEFAULT_CONFIG)
-    df = add_fields(spark, df, DEFAULT_CONFIG)
-    df = post_default(df, DEFAULT_CONFIG, msg_cols=P.POST_STRING_COLS)
-    df = es_index(spark, df, DEFAULT_CONFIG)
-    df = msgid(df, DEFAULT_CONFIG)
-    df = route(spark, df, DEFAULT_CONFIG)
-    cols = [F.map_keys(f.name) if f.dataType.typeName() == "map" else F.col(f.name)
-            for f in df.schema.fields]
-    return df.select((F.xxhash64(*cols) %% 1000000007).alias("h")).agg(F.sum("h")).collect()[0][0]
-
-n_rows = with_ingest_columns(sequences_df(spark, sf_dir, rep=rep)).count()
-job()  # warm-up (JVM JIT, file listing, broadcast)
-best = None
-for _ in range(n_runs):
-    t0 = time.perf_counter(); job(); dt = time.perf_counter() - t0
-    best = dt if best is None or dt < best else best
-print(json.dumps({"cores": cores, "rows": n_rows, "sec": round(best, 3),
-                  "rows_per_sec": round(n_rows / best, 1)}))
-spark.stop()
-"""
+#: a fresh interpreter per leg, so every leg starts its own JVM
+RUNNER = "import sys; sys.path.insert(0, %r); from tools.scaling_bench import _leg; _leg(*sys.argv[1:])" % REPO
 
 
-def run_level(cores: int, sf_dir: str, rep: int, n_runs: int = 3) -> dict:
-    # Pin the whole process tree to exactly `cores` CPUs: in local[N] the JVM's
-    # GC/JIT/shuffle threads are NOT bounded by N, so an unpinned low-N leg
-    # borrows idle cores and understates scaling.  taskset makes "N cores"
-    # mean N cores — the cluster analogue where an executor's cgroup caps it.
-    cmd = [
-        sys.executable, "-c", RUNNER % {"repo": REPO},
-        str(cores), sf_dir, str(rep), str(n_runs),
-    ]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    out = subprocess.run(
-        cmd,
-        capture_output=True,
-        text=True,
-        timeout=1800,
+def _leg(conf: str, cores: str, sf_dir: str, rep: str, n_runs: str) -> None:
+    """One leg, in this process: the routed pipeline folded through bench's
+    sink, one warm-up then best-of-``n_runs``.  Prints one JSON line."""
+    import time
+
+    from bench import _noop_sink
+    from go_fluentd_spark.config import DEFAULT_CONFIG
+    from go_fluentd_spark.operators.dispatcher import route
+    from go_fluentd_spark.plans import pipeline as P
+    from go_fluentd_spark.session import build_spark
+    from go_fluentd_spark.sources.synth import sequences_df
+
+    cores, rep = int(cores), int(rep)
+    os.makedirs("/dev/shm/spark-tmp", exist_ok=True)
+    spark = build_spark(
+        "scaling", cores=cores, shuffle_partitions=cores * 2,
+        extra_conf={"spark.local.dir": "/dev/shm/spark-tmp", **json.loads(conf)},
     )
+
+    def job():
+        return _noop_sink(route(spark, P.chain(spark, sequences_df(spark, sf_dir, rep=rep)), DEFAULT_CONFIG))
+
+    n_rows = P.chain(spark, sequences_df(spark, sf_dir, rep=rep), upto="ingested").count()
+    job()  # warm-up (JVM JIT, file listing, broadcast)
+    best = None
+    for _ in range(int(n_runs)):
+        t0 = time.perf_counter()
+        job()
+        dt = time.perf_counter() - t0
+        best = dt if best is None or dt < best else best
+    print(json.dumps({"cores": cores, "rows": n_rows, "sec": round(best, 3),
+                      "rows_per_sec": round(n_rows / best, 1)}))
+    spark.stop()
+
+
+def run_leg(conf: dict, cores: int, pin: int, sf_dir: str, rep: int, n_runs: int = 3) -> dict:
+    """Run one leg in a fresh process: a session over ``cores`` task slots
+    with ``conf`` on top of ``build_spark``'s, the whole process tree pinned
+    to CPUs 0..pin-1."""
+    # Pin the whole process tree: in local[N] the JVM's GC/JIT/shuffle
+    # threads are NOT bounded by N, so an unpinned low-N leg borrows idle
+    # cores and understates scaling.  taskset makes "N cores" mean N cores —
+    # the cluster analogue where an executor's cgroup caps it.
+    cmd = [sys.executable, "-c", RUNNER, json.dumps(conf), str(cores), sf_dir, str(rep), str(n_runs)]
+    if os.path.exists("/usr/bin/taskset"):
+        cmd = ["taskset", "-c", f"0-{pin - 1}"] + cmd
+    out = subprocess.run(cmd, capture_output=True, text=True, timeout=2400)
     for line in out.stdout.strip().splitlines()[::-1]:
         if line.startswith("{"):
             return json.loads(line)
-    raise RuntimeError(f"runner failed (cores={cores}):\n{out.stderr[-2000:]}")
+    raise RuntimeError(f"runner failed (cores={cores}, conf={conf}):\n{out.stderr[-2000:]}")
+
+
+def run_level(cores: int, sf_dir: str, rep: int, n_runs: int = 3) -> dict:
+    """A local[cores] leg pinned to exactly ``cores`` CPUs."""
+    return run_leg({}, cores, cores, sf_dir, rep, n_runs)
 
 
 def main() -> None:
@@ -108,32 +99,6 @@ def main() -> None:
         "scaling_efficiency": round(eff, 3),
     }
     print(json.dumps(result))
-
-    section = f"""## Scaling local[{n_low}] vs local[{n_high}]
-
-Identical end-to-end job (parse→enrich→route, full materialization) on
-identical input ({low['rows']:,} sequences from {sf_dir}, rep={rep}),
-local[{n_low}] vs local[{n_high}] — the sandbox stand-in for N vs {int(ratio)}N executors.
-Best of 2 timed runs after warm-up, fresh JVM per level.
-
-| parallelism | wall sec | sequences/sec |
-|---|---|---|
-| local[{n_low}] | {low['sec']} | {low['rows_per_sec']:,} |
-| local[{n_high}] | {high['sec']} | {high['rows_per_sec']:,} |
-
-**Scaling efficiency ({n_low}→{n_high} cores): {eff:.3f}** (target ≥ 0.8).
-"""
-    # BENCH.md's scaling section is hand-curated history now — rewriting it
-    # from here would clobber it, so the write is opt-in.
-    if os.environ.get("SPARK_GRAFT_WRITE_BENCHMD", "0") != "1":
-        return
-    path = os.path.join(REPO, "BENCH.md")
-    marker = f"## Scaling local[{n_low}] vs local[{n_high}]"
-    existing = open(path).read() if os.path.exists(path) else "# BENCH — measured performance\n\n"
-    if marker in existing:
-        existing = existing.split(marker)[0]
-    with open(path, "w") as f:
-        f.write(existing.rstrip() + "\n\n" + section)
 
 
 if __name__ == "__main__":
