@@ -19,10 +19,11 @@ every operator is expressed so its shuffle structure scales —
   IVF-style centroid assignment: same plan shape.
 
 All constants are fixed so the DuckDB oracle (``oracle_dataprep``) reproduces
-results bit-for-bit.  Hot-path hashes (minhash shingles, token grams, winnow)
-are pure int64 polynomial folds — identical arithmetic in both engines and
-~10x cheaper than the md5-prefix ``stable_hash64``, which remains only where
-per-row cost is negligible (simhash word hash, doc fingerprint, exact dedup).
+results bit-for-bit.  Hot-path hashes (minhash shingles and bands, token
+grams, winnow) are int64 polynomial folds, each a ``GramHash`` spec that
+emits the Spark and the DuckDB fold from one loop; they are ~10x cheaper
+than the md5-prefix ``stable_hash64``, which remains only where per-row cost
+is negligible (simhash word hash, doc fingerprint, exact dedup).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from go_fluentd_spark.functions.hashing import stable_hash64
+from go_fluentd_spark.functions.hashing import GramHash, stable_hash64
 
 # -- shared constants (mirrored by oracle_dataprep) -------------------------
 # SHINGLE_K=8: at k=4 a template-heavy corpus has random-pair jaccard ~0.28
@@ -53,6 +54,8 @@ NUM_BANDS = 4  # rows per band r = NUM_HASHES // NUM_BANDS = 4
 MH_BUCKET_CAP = 64
 HASH_A = [2 * j + 3 for j in range(NUM_HASHES)]
 HASH_B = [j * j + 7 for j in range(NUM_HASHES)]
+SHINGLE_HASH = GramHash(SHINGLE_K, 257, MINHASH_P)  # over char codes
+BAND_HASH = GramHash(NUM_HASHES // NUM_BANDS, 31, MINHASH_P)  # over a band's sigs
 LSH_PLANES = 8  # random-hyperplane count for embedding LSH
 EMB_DIM = 64
 LEN_BUCKET = 32  # n-gram jaccard blocking granularity (chars)
@@ -141,52 +144,41 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shingle hashing: Horner polynomial over char codes, mod MINHASH_P — the
-# cross-engine integer recipe already proven by token_ngram_dup_stats and
-# winnow_fingerprints.  Replaces the round-1 md5-prefix hash: ~10M md5 calls
-# dominated the minhash bench query (8.3 s at sf0.1); pure int64 arithmetic
-# is identical in Spark and DuckDB, so parity is exact by construction.
-MH_GRAM_B = 257
-
-
 def _with_shingle_hashes(
-    d: DataFrame, keep_cols: list[str], distinct: bool = True
+    d: DataFrame, keep_cols: list[str], text: Column, spec: GramHash,
+    distinct: bool = True,
 ) -> DataFrame:
-    """Append ``_hs``: k-char-gram polynomial hashes of ``text`` (DISTINCT
-    by default — the shingle-set view; ``distinct=False`` keeps every
-    occurrence for repetition statistics).  Staged projections (the winnow
-    pattern): ``_codes`` is bound in its own select and consumed twice
-    downstream, so CollapseProject cannot inline the split/ascii back into
-    the HOF lambda (per-element re-eval trap)."""
-    t0 = F.col("text")
-    t = F.when(F.length(t0) < SHINGLE_K, F.rpad(t0, SHINGLE_K, "#")).otherwise(t0)
+    """Append ``_n_grams`` and ``_hs``: the ``spec.k``-char-gram hashes of
+    ``text``, right-padded with ``#`` to at least one gram (DISTINCT by
+    default — the shingle-set view; ``distinct=False`` keeps every
+    occurrence in position order).  Staged projections: ``_codes`` is bound
+    in its own select and consumed twice downstream (``_n_grams`` and the
+    fold), so CollapseProject cannot inline the pad/split/ascii — or a
+    normalization regex in ``text`` — back into the HOF lambda, where it
+    would re-run PER ELEMENT (measured: minutes/doc instead of ms)."""
+    t = F.when(F.length(text) < spec.k, F.rpad(text, spec.k, "#")).otherwise(text)
     d = d.select(
         *keep_cols,
         F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("bigint")).alias(
             "_codes"
         ),
     )
-    n = F.greatest(F.size("_codes") - (SHINGLE_K - 1), F.lit(1))
-
-    def gram_hash(i: Column) -> Column:
-        acc = F.lit(0).cast("bigint")
-        for j in range(SHINGLE_K):
-            acc = (acc * MH_GRAM_B + F.element_at(F.col("_codes"), i + j)) % MINHASH_P
-        return acc
-
-    hs = F.transform(F.sequence(F.lit(1), n), gram_hash)
+    n = F.greatest(F.size("_codes") - (spec.k - 1), F.lit(1))
+    codes = F.col("_codes")
+    hs = F.transform(
+        F.sequence(F.lit(1), n),
+        lambda i: spec.fold([F.element_at(codes, i + j) for j in range(spec.k)]),
+    )
     if distinct:
         hs = F.array_distinct(hs)
-    return d.select(
-        *keep_cols,
-        n.alias("_n_grams"),  # second _codes use: keeps CollapseProject out
-        hs.alias("_hs"),
-    )
+    return d.select(*keep_cols, n.alias("_n_grams"), hs.alias("_hs"))
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-permutation MinHash signature per doc (narrow, no shuffle)."""
-    d = _with_shingle_hashes(docs(spark, sf_dir), ["doc_id", "lang"])
+    d = _with_shingle_hashes(
+        docs(spark, sf_dir), ["doc_id", "lang"], F.col("text"), SHINGLE_HASH
+    )
 
     def perm(a: int, b: int):
         return lambda h: (a * h + b) % MINHASH_P
@@ -198,15 +190,15 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "lang", *sigs)
 
 
-def _band_cols(r: int = NUM_HASHES // NUM_BANDS) -> list[Column]:
-    """Fold each band's r signature values into one bucket key."""
-    out = []
-    for b in range(NUM_BANDS):
-        acc = F.lit(0).cast("bigint")
-        for j in range(b * r, (b + 1) * r):
-            acc = (acc * 31 + F.col(f"sig{j}")) % MINHASH_P
-        out.append(acc.alias(f"band{b}"))
-    return out
+def _band_cols() -> list[Column]:
+    """Fold each band's ``BAND_HASH.k`` signature values into one bucket key."""
+    r = BAND_HASH.k
+    return [
+        BAND_HASH.fold([F.col(f"sig{j}") for j in range(b * r, (b + 1) * r)]).alias(
+            f"band{b}"
+        )
+        for b in range(NUM_BANDS)
+    ]
 
 
 def minhash_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,9 +270,9 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    sh = _with_shingle_hashes(docs(spark, sf_dir), ["doc_id"]).select(
-        "doc_id", F.col("_hs").alias("sh")
-    )
+    sh = _with_shingle_hashes(
+        docs(spark, sf_dir), ["doc_id"], F.col("text"), SHINGLE_HASH
+    ).select("doc_id", F.col("_hs").alias("sh"))
     verified = (
         cand.join(sh.withColumnsRenamed({"doc_id": "a_doc", "sh": "sha"}), "a_doc")
         .join(sh.withColumnsRenamed({"doc_id": "b_doc", "sh": "shb"}), "b_doc")
@@ -527,10 +519,11 @@ def ngram_jaccard_pairs(
 # token-level substring dedup (the tokens-native op: the north input table
 # IS tokenized sequences):
 TOKEN_NGRAM = 8  # token n-gram length (the dedup unit)
-# prime < 10^12 so token(<=50256) * pow stays far inside int64 in BOTH
-# engines; ~1e12 hash space over ~1e6 grams ≈ 0.5 expected collisions
+# prime < 10^12 so a Horner step (TOKEN_P-1)*TOKEN_B + token stays inside
+# int64; ~1e12 hash space over ~1e6 grams ≈ 0.5 expected collisions
 TOKEN_P = 999_999_999_989
 TOKEN_B = 1_000_003
+TOKEN_HASH = GramHash(TOKEN_NGRAM, TOKEN_B, TOKEN_P)
 
 
 def _token_gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,25 +535,17 @@ def _token_gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seq = sequences_df(spark, sf_dir).select("doc_id", "tokens", "n_tok")
     n_grams = F.greatest(F.col("n_tok") - (TOKEN_NGRAM - 1), F.lit(0))
-    pows = [pow(TOKEN_B, TOKEN_NGRAM - 1 - j, TOKEN_P) for j in range(TOKEN_NGRAM)]
-
-    def gram_hash(i: Column) -> Column:
-        # try_element_at: ANSI-safe — rows shorter than the gram width yield
-        # NULL grams, which the n_grams>0 guard below never emits
-        acc = F.lit(0).cast("bigint")
-        for j, p in enumerate(pows):
-            acc = (
-                acc + F.try_element_at(F.col("tokens"), i + j).cast("bigint") * p
-            ) % TOKEN_P
-        return acc
-
-    return seq.select(
-        "doc_id",
-        "n_tok",
-        n_grams.alias("n_grams"),
-        F.transform(F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))), gram_hash).alias(
-            "_g"
+    toks = F.col("tokens")
+    # try_element_at: ANSI-safe — rows shorter than the gram width yield
+    # NULL grams, which the n_grams>0 guard below never emits
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
+        lambda i: TOKEN_HASH.fold(
+            [F.try_element_at(toks, i + j).cast("bigint") for j in range(TOKEN_NGRAM)]
         ),
+    )
+    return seq.select(
+        "doc_id", "n_tok", n_grams.alias("n_grams"), grams.alias("_g")
     ).select(
         "doc_id",
         "n_tok",
@@ -792,14 +777,18 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate generations.  Shape at scale: the per-doc counts are narrow
     array work; the top-gram count is ONE (doc_id, gram)-keyed shuffle with
     map-side combine then a per-doc max — linear, no self-joins."""
-    base = _with_shingle_hashes(docs(spark, sf_dir), ["doc_id"], distinct=False)
+    base = _with_shingle_hashes(
+        docs(spark, sf_dir), ["doc_id"], F.col("text"), SHINGLE_HASH, distinct=False
+    )
     stats = base.select(
         "doc_id",
         F.col("_n_grams").cast("bigint").alias("n_grams"),
         F.size(F.array_distinct("_hs")).cast("bigint").alias("n_distinct"),
     )
+    # explode_outer: _hs is never empty (n >= 1 after rpad), and the plain
+    # explode's inferred size(_hs) > 0 filter drags _codes' split into the fold
     top = (
-        base.select("doc_id", F.explode("_hs").alias("gram"))
+        base.select("doc_id", F.explode_outer("_hs").alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("doc_id")
@@ -829,8 +818,11 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark gram set is bounded by the EVAL corpus (tiny vs training
     data) — the semi-join broadcasts it; doc grams take one map-combined
     shuffle — linear, same shape as token_ngram_dup_stats."""
-    g = _with_shingle_hashes(docs(spark, sf_dir), ["doc_id"])
-    grams = g.select("doc_id", F.explode("_hs").alias("gram"))
+    g = _with_shingle_hashes(
+        docs(spark, sf_dir), ["doc_id"], F.col("text"), SHINGLE_HASH
+    )
+    # explode_outer: see repetition_stats (same rows, no inlined split)
+    grams = g.select("doc_id", F.explode_outer("_hs").alias("gram"))
     bench = (
         grams.filter(F.col("doc_id") % BENCH_DOC_MOD == 0).select("gram").distinct()
     )
@@ -1224,9 +1216,8 @@ def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # winnowing fingerprints (Schleimer/Wilkerson/Aiken, the MOSS algorithm):
 WINNOW_K = 5  # k-gram length
 WINNOW_W = 4  # winnow window (guarantee: matches >= W+K-1 chars share a fp)
-WINNOW_B = 257  # polynomial base
-WINNOW_P = 1_000_003  # modulus (fits bigint: max term < 1.2e6 * 257^4)
-_WINNOW_POWS = [WINNOW_B ** (WINNOW_K - 1 - j) for j in range(WINNOW_K)]
+WINNOW_P = 1_000_003  # modulus
+WINNOW_HASH = GramHash(WINNOW_K, 257, WINNOW_P)  # over char codes
 
 
 def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,35 +1225,11 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     polynomial hash of every k-char gram of the normalized text, then the
     min of each w-gram window, dedup'd — the standard local fingerprint set
     whose guarantee is that any shared substring of length >= w+k-1 yields a
-    shared fingerprint.  Per-row narrow Column work.
-
-    Plan-shape note: each stage is a SEPARATE projection binding its input
-    to an attribute, and every intermediate (_codes, _hs) is consumed TWICE
-    downstream, so CollapseProject cannot inline the producing expression
-    into a higher-order-function lambda — inlined, the normalization regex
-    would re-run PER CHARACTER (measured: minutes/doc instead of ms)."""
-    t0 = norm_text(F.col("text"))
-    t = F.when(F.length(t0) < WINNOW_K, F.rpad(t0, WINNOW_K, "#")).otherwise(t0)
-
-    d = docs(spark, sf_dir).select("doc_id", t.alias("_t"))
-    d = d.select(
-        "doc_id",
-        F.transform(F.split("_t", ""), lambda c: F.ascii(c).cast("bigint")).alias(
-            "_codes"
-        ),
-    )
-    n = F.greatest(F.size("_codes") - (WINNOW_K - 1), F.lit(1))
-
-    def gram_hash(i: Column) -> Column:
-        acc = F.lit(0).cast("bigint")
-        for j in range(WINNOW_K):
-            acc = acc + F.element_at(F.col("_codes"), i + j) * _WINNOW_POWS[j]
-        return acc % WINNOW_P
-
-    d = d.select(
-        "doc_id",
-        n.alias("n_grams"),  # second _codes use: keeps CollapseProject out
-        F.transform(F.sequence(F.lit(1), n), gram_hash).alias("_hs"),
+    shared fingerprint.  Per-row narrow Column work; ``_hs`` is consumed
+    twice below (window count and window minima), so it stays bound too."""
+    d = _with_shingle_hashes(
+        docs(spark, sf_dir), ["doc_id"], norm_text(F.col("text")), WINNOW_HASH,
+        distinct=False,
     )
     m = F.greatest(F.size("_hs") - (WINNOW_W - 1), F.lit(1))
     mins = F.transform(
@@ -1272,7 +1239,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = F.array_sort(F.array_distinct(mins))
     return d.select(
         "doc_id",
-        "n_grams",
+        F.col("_n_grams").alias("n_grams"),
         F.size(fps).alias("n_fps"),
         F.array_join(fps, ",").alias("fps_csv"),
     )

@@ -516,13 +516,8 @@ def q_token_ngram_dup_stats() -> str:
     substring-dedup statistic over the sequence table)."""
     from go_fluentd_spark.operators import dataprep as D
 
-    pows = [
-        pow(D.TOKEN_B, D.TOKEN_NGRAM - 1 - j, D.TOKEN_P) for j in range(D.TOKEN_NGRAM)
-    ]
-    fold = (
-        f"CAST(list_sum(list_transform(range(0, {D.TOKEN_NGRAM}), "
-        f"j -> CAST(tokens[CAST(i + j AS INT)] AS BIGINT) * ([{', '.join(map(str, pows))}])[j + 1] "
-        f"% {D.TOKEN_P})) % {D.TOKEN_P} AS BIGINT)"
+    fold = D.TOKEN_HASH.fold_sql(
+        [f"CAST(tokens[CAST(i + {j} AS INT)] AS BIGINT)" for j in range(D.TOKEN_NGRAM)]
     )
     body = f"""
 g0 AS (
@@ -557,11 +552,8 @@ def q_substr_dup_spans() -> str:
     from go_fluentd_spark.operators import dataprep as D
 
     L = D.TOKEN_NGRAM
-    pows = [pow(D.TOKEN_B, L - 1 - j, D.TOKEN_P) for j in range(L)]
-    fold = (
-        f"CAST(list_sum(list_transform(range(0, {L}), "
-        f"j -> CAST(tokens[CAST(t.i + j AS INT)] AS BIGINT) * ([{', '.join(map(str, pows))}])[j + 1] "
-        f"% {D.TOKEN_P})) % {D.TOKEN_P} AS BIGINT)"
+    fold = D.TOKEN_HASH.fold_sql(
+        [f"CAST(tokens[CAST(t.i + {j} AS INT)] AS BIGINT)" for j in range(L)]
     )
     body = f"""
 g0 AS (

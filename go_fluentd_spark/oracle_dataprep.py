@@ -3,9 +3,8 @@ Constants imported from the Spark side — one source of truth."""
 
 from __future__ import annotations
 
+from go_fluentd_spark.functions.hashing import GramHash, stable_hash64_sql
 from go_fluentd_spark.operators import dataprep as D
-
-H = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"  # stable_hash64
 
 
 def _norm(x: str) -> str:
@@ -19,35 +18,22 @@ list_distinct(list_transform(
 """
 
 
-def _gram_hash_sql() -> str:
-    """Horner polynomial over char codes, mod MINHASH_P — generated with the
-    SAME fold order as dataprep._with_shingle_hashes (acc = (acc*B + code) % P
-    per step), so the int64 arithmetic is identical in both engines."""
-    acc = "CAST(0 AS BIGINT)"  # seed BIGINT so the fold never overflows INT32
-    for j in range(D.SHINGLE_K):
-        acc = (
-            f"(({acc}) * {D.MH_GRAM_B} + "
-            f"ascii(substr(t, CAST(i + {j} AS INT), 1))) % {D.MINHASH_P}"
-        )
-    return acc
-
-
-def _shingle_hashes_sql(cols: str, out: str = "hs", distinct: bool = True) -> str:
-    """Subquery text: (cols, ``out`` = polynomial gram hashes, distinct by
-    default to mirror dataprep._with_shingle_hashes)."""
-    gram = _gram_hash_sql()
-    lst = (
-        f"list_transform(range(1, greatest(length(t) - {D.SHINGLE_K - 1}, 1) + 1),"
-        f" i -> {gram})"
+def _shingle_hashes_sql(
+    cols: str, text: str, spec: GramHash, out: str = "hs", distinct: bool = True
+) -> str:
+    """Subquery text: (cols, ``n_grams``, ``out`` = the ``spec.k``-char-gram
+    hashes of ``text``) — the twin of dataprep._with_shingle_hashes."""
+    k = spec.k
+    gram = spec.fold_sql(
+        [f"ascii(substr(t, CAST(i + {j} AS INT), 1))" for j in range(k)]
     )
+    lst = f"list_transform(range(1, greatest(length(t) - {k - 1}, 1) + 1), i -> {gram})"
     if distinct:
         lst = f"list_distinct({lst})"
     return f"""
-  SELECT {cols}, {lst} AS {out}
-  FROM (SELECT {cols}, CASE WHEN length(text) < {D.SHINGLE_K}
-                            THEN rpad(text, {D.SHINGLE_K}, '#')
-                            ELSE text END AS t
-        FROM documents)"""
+  SELECT {cols}, greatest(length(t) - {k - 1}, 1) AS n_grams, {lst} AS {out}
+  FROM (SELECT {cols}, CASE WHEN length(x) < {k} THEN rpad(x, {k}, '#') ELSE x END AS t
+        FROM (SELECT {cols}, {text} AS x FROM documents))"""
 
 
 def q_dedup_exact() -> str:
@@ -58,7 +44,7 @@ FROM documents GROUP BY md5(text)"""
 
 def q_fingerprints() -> str:
     return f"""
-SELECT doc_id, {H.format(x=_norm('text'))} AS fingerprint FROM documents"""
+SELECT doc_id, {stable_hash64_sql(_norm('text'))} AS fingerprint FROM documents"""
 
 
 def q_token_stats() -> str:
@@ -112,20 +98,10 @@ FROM everydoc"""
 
 
 def q_winnow_fingerprints() -> str:
-    K, W, P = D.WINNOW_K, D.WINNOW_W, D.WINNOW_P
-    pows = ", ".join(str(p) for p in D._WINNOW_POWS)
-    gram = (
-        f"list_sum(list_transform(range(0, {K}), "
-        f"j -> ascii(substr(t, CAST(i + j AS INT), 1)) * ([{pows}])[j + 1])) % {P}"
-    )
+    W = D.WINNOW_W
+    h = _shingle_hashes_sql("doc_id", _norm("text"), D.WINNOW_HASH, distinct=False)
     return f"""
-WITH t0 AS (
-  SELECT doc_id, CASE WHEN length(nrm) < {K} THEN rpad(nrm, {K}, '#') ELSE nrm END AS t
-  FROM (SELECT doc_id, {_norm('text')} AS nrm FROM documents)),
-h AS (
-  SELECT doc_id, greatest(length(t) - {K - 1}, 1) AS n_grams,
-    list_transform(range(1, greatest(length(t) - {K - 1}, 1) + 1), i -> {gram}) AS hs
-  FROM t0),
+WITH h AS ({h}),
 w AS (
   SELECT doc_id, n_grams,
     list_sort(list_distinct(list_transform(
@@ -179,19 +155,21 @@ def q_minhash_signatures() -> str:
         for j, (a, b) in enumerate(zip(D.HASH_A, D.HASH_B))
     )
     return f"""
-WITH hs AS ({_shingle_hashes_sql('doc_id, lang')})
+WITH hs AS ({_shingle_hashes_sql('doc_id, lang', 'text', D.SHINGLE_HASH)})
 SELECT doc_id, lang, {sig_cols} FROM hs"""
 
 
 def _minhash_bands_sql() -> str:
     """CTE chain ``sig`` -> ``bands(doc_id, band, bucket)``."""
-    r = D.NUM_HASHES // D.NUM_BANDS
-    band_selects = []
-    for b in range(D.NUM_BANDS):
-        acc = "0"
-        for j in range(b * r, (b + 1) * r):
-            acc = f"(({acc}) * 31 + sig{j}) % {D.MINHASH_P}"
-        band_selects.append(f"SELECT doc_id, {b} AS band, {acc} AS bucket FROM sig")
+    r = D.BAND_HASH.k
+    folds = [
+        D.BAND_HASH.fold_sql([f"sig{j}" for j in range(b * r, (b + 1) * r)])
+        for b in range(D.NUM_BANDS)
+    ]
+    band_selects = [
+        f"SELECT doc_id, {b} AS band, {acc} AS bucket FROM sig"
+        for b, acc in enumerate(folds)
+    ]
     return f"""sig AS ({q_minhash_signatures().strip()}),
 bands AS (
   {" UNION ALL ".join(band_selects)})"""
@@ -218,7 +196,7 @@ capped AS (
 cand AS (
   SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
   FROM capped a JOIN capped b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-sh AS ({_shingle_hashes_sql('doc_id', out='s')})
+sh AS ({_shingle_hashes_sql('doc_id', 'text', D.SHINGLE_HASH, out='s')})
 SELECT a_doc, b_doc,
   round(len(list_filter(sa.s, x -> list_contains(sb.s, x))) * 1.0
         / (len(sa.s) + len(sb.s) - len(list_filter(sa.s, x -> list_contains(sb.s, x)))), 4) AS jaccard
@@ -363,7 +341,7 @@ def q_simhash16() -> str:
     return f"""
 WITH w AS (
   SELECT doc_id,
-    list_transform(string_split({_norm('text')}, ' '), x -> {H.format(x='x')} % 65536) AS hw
+    list_transform(string_split({_norm('text')}, ' '), x -> {stable_hash64_sql('x')} % 65536) AS hw
   FROM documents)
 SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM w"""
 
@@ -672,7 +650,7 @@ def q_repetition_stats() -> str:
     """Mirror of dataprep.repetition_stats (intra-doc gram repetition +
     top-gram share) over the NON-distinct gram hashes."""
     return f"""
-WITH h AS ({_shingle_hashes_sql('doc_id', distinct=False)}),
+WITH h AS ({_shingle_hashes_sql('doc_id', 'text', D.SHINGLE_HASH, distinct=False)}),
 st AS (
   SELECT doc_id, len(hs) AS n_grams, len(list_distinct(hs)) AS n_distinct
   FROM h),
@@ -693,7 +671,7 @@ def q_benchmark_contamination() -> str:
     every non-benchmark doc against the 1-in-BENCH_DOC_MOD benchmark
     sample's gram set."""
     return f"""
-WITH h AS ({_shingle_hashes_sql('doc_id')}),
+WITH h AS ({_shingle_hashes_sql('doc_id', 'text', D.SHINGLE_HASH)}),
 g AS (SELECT doc_id, g FROM h, UNNEST(hs) AS t(g)),
 bench AS (SELECT DISTINCT g FROM g WHERE doc_id % {D.BENCH_DOC_MOD} = 0),
 tot AS (

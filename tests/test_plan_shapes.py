@@ -120,6 +120,23 @@ def test_token_lm_plan_shape(spark):
     assert _n(plan, "BroadcastNestedLoopJoin") == 0
 
 
+def test_char_gram_fold_reads_bound_codes(spark):
+    """Every char-gram fold reads the ``_codes`` attribute its staging
+    projection binds: no optimizer rule may substitute the split/ascii back
+    into the fold's ``element_at`` calls, where it re-runs per gram term (a
+    plain ``explode`` over the hashes did, via its inferred size > 0
+    filter: 8-16 copies per plan and a 10-30x slower first collect)."""
+    for name in (
+        "minhash_signatures",
+        "minhash_lsh_pairs",
+        "winnow_fingerprints",
+        "repetition_stats",
+        "benchmark_contamination",
+    ):
+        plan = getattr(DP, name)(spark, SF)._jdf.queryExecution().optimizedPlan()
+        assert "element_at(transform(split(" not in plan.toString(), name
+
+
 def test_lsh_pair_joins_never_nested_loop(spark):
     for df in (
         DP.minhash_lsh_pairs(spark, SF),
